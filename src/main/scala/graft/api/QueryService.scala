@@ -23,7 +23,9 @@ import java.nio.charset.StandardCharsets
   * in-process call — the executor default (a cached thread pool) is
   * plenty; the heavy lifting (index build) happened before `serve`.
   * Errors mirror the reference's envelope: a malformed body or missing
-  * vector returns `{"error": ...}` (query_service.py:162-163). */
+  * vector returns 400 `{"error": ...}` (query_service.py:162-163), and a
+  * request that fails inside the engine returns 500 in the same
+  * envelope. */
 object QueryService {
   // TCP_NODELAY on exchange sockets: without it, small request/response
   // pairs stall on the Nagle + delayed-ACK interaction — measured as a
@@ -120,112 +122,85 @@ object QueryService {
     server
   }
 
-  private def handle(engine: QueryEngine, ex: HttpExchange): Unit = {
+  /** The one response path every route shares: 405 unless POST, read
+    * the body, `parse` it (Left = the reference's 400 envelope), `answer`
+    * it, and send the (status, JSON body). Anything a route throws is a
+    * 500 in the same envelope — a client gets a status, never a dropped
+    * connection. Error strings are Jackson-serialized: parser and Spark
+    * messages can embed quotes/control chars (source excerpts), which an
+    * interpolated envelope would emit as invalid JSON. */
+  private def respond[A](ex: HttpExchange)(parse: String => Either[String, A])
+                        (answer: A => (Int, String)): Unit =
     try {
       val (status, body) =
-        if (ex.getRequestMethod != "POST")
-          (405, """{"error":"POST required"}""")
-        else {
-          val raw = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-          parse(raw) match {
-            case Left(err) =>
-              (400, s"""{"error":${mapper.writeValueAsString(err)}}""")
-            case Right((vector, k, maxCand)) =>
-              (200, toJson(engine.query(vector, k, maxCand)))
+        try {
+          if (ex.getRequestMethod != "POST") (405, """{"error":"POST required"}""")
+          else parse(new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)) match {
+            case Left(err) => (400, errorBody(err))
+            case Right(req) => answer(req)
           }
-        }
+        } catch { case scala.util.control.NonFatal(e) => (500, errorBody(e.toString)) }
       val bytes = body.getBytes(StandardCharsets.UTF_8)
       ex.getResponseHeaders.set("Content-Type", "application/json")
       ex.sendResponseHeaders(status, bytes.length.toLong)
       ex.getResponseBody.write(bytes)
     } finally ex.close()
-  }
 
-  private def handleVec(engine: VectorEngine, ex: HttpExchange): Unit = {
-    try {
-      val (status, body) =
-        if (ex.getRequestMethod != "POST")
-          (405, """{"error":"POST required"}""")
-        else {
-          val raw = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-          parseVec(raw) match {
-            case Left(err) =>
-              (400, s"""{"error":${mapper.writeValueAsString(err)}}""")
-            case Right((vector, k, nprobe, mode)) =>
-              try {
-                val hits = engine.query(vector, k, mode, nprobe)
-                (200, hits.map { case (id, rank) => s"""{"id":$id,"rank":$rank}""" }
-                  .mkString("""{"candidates":[""", ",", "]}"))
-              } catch {
-                // a lean engine refusing a float-rescoring mode, or an
-                // unknown mode: the caller's error, reference envelope
-                case e @ (_: IllegalStateException | _: IllegalArgumentException) =>
-                  (400, s"""{"error":"${e.getMessage.replace('"', '\'')}"}""")
-              }
-          }
-        }
-      val bytes = body.getBytes(StandardCharsets.UTF_8)
-      ex.getResponseHeaders.set("Content-Type", "application/json")
-      ex.sendResponseHeaders(status, bytes.length.toLong)
-      ex.getResponseBody.write(bytes)
-    } finally ex.close()
-  }
+  private def errorBody(err: String): String = s"""{"error":${mapper.writeValueAsString(err)}}"""
+
+  private def handle(engine: QueryEngine, ex: HttpExchange): Unit =
+    respond(ex)(parse) { case (vector, k, maxCand) =>
+      (200, toJson(engine.query(vector, k, maxCand)))
+    }
+
+  private def handleVec(engine: VectorEngine, ex: HttpExchange): Unit =
+    respond(ex)(parseVec) { case (vector, k, nprobe, mode) =>
+      try {
+        val hits = engine.query(vector, k, mode, nprobe)
+        (200, hits.map { case (id, rank) => s"""{"id":$id,"rank":$rank}""" }
+          .mkString("""{"candidates":[""", ",", "]}"))
+      } catch {
+        // a lean engine refusing a float-rescoring mode, or an
+        // unknown mode: the caller's error, reference envelope
+        case e @ (_: IllegalStateException | _: IllegalArgumentException) =>
+          (400, s"""{"error":"${e.getMessage.replace('"', '\'')}"}""")
+      }
+    }
 
   private def handleDedup(standing: graft.operators.StandingCorpus,
                           lock: java.util.concurrent.locks.ReentrantReadWriteLock,
-                          ex: HttpExchange): Unit = {
-    try {
-      val (status, body) =
-        if (ex.getRequestMethod != "POST")
-          (405, """{"error":"POST required"}""")
-        else {
-          val raw = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-          parseDedup(raw) match {
-            // Jackson-serialize the error string: parser messages can
-            // embed quotes/control chars (source excerpts), which an
-            // interpolated envelope would emit as invalid JSON
-            case Left(err) =>
-              (400, s"""{"error":${mapper.writeValueAsString(err)}}""")
-            case Right((docs, absorb)) =>
-              val spark = standing.spark
-              val df = spark.createDataFrame(
-                java.util.Arrays.asList(docs.map { case (id, text) =>
-                  org.apache.spark.sql.Row(id, text) }: _*),
-                org.apache.spark.sql.types.StructType(Seq(
-                  org.apache.spark.sql.types.StructField("doc_id",
-                    org.apache.spark.sql.types.LongType, nullable = false),
-                  org.apache.spark.sql.types.StructField("text",
-                    org.apache.spark.sql.types.StringType, nullable = true))))
-              // single-ingest-loop contract for MUTATION: absorbs hold
-              // the write lock exclusively. Classifies are read-only and
-              // share the read lock — concurrent probes no longer queue
-              // behind each other; any completed background compaction
-              // is swapped under the write lock FIRST so the read-locked
-              // path never mutates standing state.
-              val st =
-                if (absorb) {
-                  val w = lock.writeLock(); w.lock()
-                  try standing.classifyAbsorb(df) finally w.unlock()
-                } else {
-                  if (standing.compactionReady) {
-                    val w = lock.writeLock(); w.lock()
-                    try standing.swapCompactedIfReady() finally w.unlock()
-                  }
-                  val r = lock.readLock(); r.lock()
-                  try standing.classifyShared(df) finally r.unlock()
-                }
-              val byId = st.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-              (200, docs.map { case (id, _) =>
-                s"""{"id":$id,"status":"${byId(id)}"}"""
-              }.mkString("""{"statuses":[""", ",", "]}"))
+                          ex: HttpExchange): Unit =
+    respond(ex)(parseDedup) { case (docs, absorb) =>
+      val df = standing.spark.createDataFrame(
+        java.util.Arrays.asList(docs.map { case (id, text) =>
+          org.apache.spark.sql.Row(id, text) }: _*),
+        org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("doc_id",
+            org.apache.spark.sql.types.LongType, nullable = false),
+          org.apache.spark.sql.types.StructField("text",
+            org.apache.spark.sql.types.StringType, nullable = true))))
+      // single-ingest-loop contract for MUTATION: absorbs hold the write
+      // lock exclusively. Classifies are read-only and share the read
+      // lock — concurrent probes no longer queue behind each other; any
+      // completed background compaction is swapped under the write lock
+      // FIRST so the read-locked path never mutates standing state.
+      val st =
+        if (absorb) {
+          val w = lock.writeLock(); w.lock()
+          try standing.classifyAbsorb(df) finally w.unlock()
+        } else {
+          if (standing.compactionReady) {
+            val w = lock.writeLock(); w.lock()
+            try standing.swapCompactedIfReady() finally w.unlock()
           }
+          val r = lock.readLock(); r.lock()
+          try standing.classifyShared(df) finally r.unlock()
         }
-      val bytes = body.getBytes(StandardCharsets.UTF_8)
-      ex.getResponseHeaders.set("Content-Type", "application/json")
-      ex.sendResponseHeaders(status, bytes.length.toLong)
-      ex.getResponseBody.write(bytes)
-    } finally ex.close()
-  }
+      val byId = st.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      (200, docs.map { case (id, _) =>
+        s"""{"id":$id,"status":"${byId(id)}"}"""
+      }.mkString("""{"statuses":[""", ",", "]}"))
+    }
 
   /** Parse `{"docs":[{"id":n,"text":s}...], "absorb":b}`. */
   private def parseDedup(raw: String): Either[String, (Seq[(Long, String)], Boolean)] =

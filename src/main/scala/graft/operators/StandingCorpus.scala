@@ -52,8 +52,13 @@ import org.apache.spark.sql.functions._
   * Signature family: md5-hashed word k-shingles (K=3 by default), the
   * oracle-replayable family every dedup gate uses.
   *
-  * Not thread-safe; call from a single ingest loop (Structured Streaming
-  * serializes micro-batches per query).
+  * Threading: mutating calls (classify, classifyAbsorb, compact,
+  * swapCompactedIfReady) belong to a single owner — an ingest loop
+  * (Structured Streaming serializes micro-batches per query) or a write
+  * lock. [[StandingCorpus.classifyShared]] may run concurrently under
+  * the matching read lock. The standing tables are read through the
+  * corpus's own clone of the caller's session, so no probe ever sets
+  * conf on the caller's session.
   */
 object StandingCorpus {
 
@@ -101,8 +106,13 @@ object StandingCorpus {
 
   /** Probe-key sets larger than this are not pushed as In filters
     * (partition pruning still applies) — bounds both the driver collect
-    * and the per-row-group predicate evaluation cost. */
-  private val MaxPushedKeys = 32768
+    * and the per-row-group predicate evaluation cost. Also the probe
+    * session's parquet In-filter threshold: Spark 4 turns an In with
+    * more values than the threshold (default 10) into one gteq/lteq
+    * RANGE predicate for parquet pushdown, and probe keys are uniform
+    * hashes, so that range spans the whole domain and prunes no row
+    * group. */
+  private[graft] val MaxPushedKeys = 32768
 
   private[operators] def partsFor(rows: Long, perPart: Long): Int = {
     var p = MinParts
@@ -118,6 +128,17 @@ object StandingCorpus {
     pmod(xxhash64(id), lit(p.toLong)).cast("int")
   private def pbIdx(key64: org.apache.spark.sql.Column, p: Int) =
     pmod(key64, lit(p.toLong)).cast("int")
+
+  /** The three table writers, shared by [[build]] and compaction. */
+  private def writeHashes(hashes: DataFrame, m: Meta, v: String): Unit =
+    writePartitioned(hashes, pbHash(col("_h"), m.pHash), m.pHash, s"$v/hashes",
+      col("_h"), m.nDocs, HashRowsPerPart)
+  private def writeSigs(sigs: DataFrame, m: Meta, v: String): Unit =
+    writePartitioned(sigs, pbSig(col("doc_id"), m.pSig), m.pSig, s"$v/sigs",
+      col("doc_id"), m.nDocs, SigRowsPerPart)
+  private def writeIndex(postings: DataFrame, m: Meta, v: String): Unit =
+    writePartitioned(postings, pbIdx(col("key64"), m.pIdx), m.pIdx, s"$v/index",
+      col("key64"), m.nDocs * m.bands, IdxRowsPerPart)
 
   /** Sign (id, text) rows with the md5 shingle family. */
   def sign(docs: DataFrame, meta: Meta, idCol: String = "doc_id",
@@ -167,17 +188,8 @@ object StandingCorpus {
     val s = Option(sigs).getOrElse(sign(docs, meta, idCol, textCol))
       .select(col(idCol).cast("long").as("doc_id"), col("sig"))
     val v = s"$dir/v1"
-    def writeHashes(): Unit =
-      writePartitioned(docs.select(md5(col(textCol)).as("_h")),
-        pbHash(col("_h"), meta.pHash), meta.pHash, s"$v/hashes", col("_h"),
-        nDocs, HashRowsPerPart)
-    def writeSigs(sf: DataFrame): Unit =
-      writePartitioned(sf, pbSig(col("doc_id"), meta.pSig), meta.pSig, s"$v/sigs",
-        col("doc_id"), nDocs, SigRowsPerPart)
-    def writeIndex(sf: DataFrame): Unit =
-      writePartitioned(Lsh.postings(sf, "doc_id", "sig", lsh),
-        pbIdx(col("key64"), meta.pIdx), meta.pIdx, s"$v/index", col("key64"),
-        nDocs * lsh.bands, IdxRowsPerPart)
+    val hashes = docs.select(md5(col(textCol)).as("_h"))
+    def postings(sf: DataFrame) = Lsh.postings(sf, "doc_id", "sig", lsh)
     // The three table writes are mutually independent once the signature
     // frame is materialized, so below the size gate ALL THREE overlap
     // (guide: submit independent jobs from driver threads so one job's
@@ -201,22 +213,30 @@ object StandingCorpus {
         t.start()
         t
       }
-      val ts = Seq(th("graft-standing-build-hashes")(writeHashes()),
-        th("graft-standing-build-sigs")(writeSigs(sMat)))
+      val ts = Seq(th("graft-standing-build-hashes")(writeHashes(hashes, meta, v)),
+        th("graft-standing-build-sigs")(writeSigs(sMat, meta, v)))
       // join in a finally: the method must not return/throw while a
       // writer thread is still writing into $dir — a caller that catches
       // and retries build() into the same dir would otherwise race two
-      // concurrent writers on one path
-      try writeIndex(sMat)
-      finally ts.foreach(_.join())
-      sMat.unpersist(blocking = false)
-      if (err.get() != null) throw err.get()
+      // concurrent writers on one path. A writer's error rides along as
+      // suppressed when the index write failed too.
+      var failure: Throwable = null
+      try writeIndex(postings(sMat), meta, v)
+      catch { case e: Throwable => failure = e; throw e }
+      finally {
+        ts.foreach(_.join())
+        graft.api.QueryEngine.releaseFrame(sMat)
+        val writerErr = err.get()
+        if (writerErr != null) {
+          if (failure != null) failure.addSuppressed(writerErr) else throw writerErr
+        }
+      }
     } else {
-      writeHashes()
-      writeSigs(s)
+      writeHashes(hashes, meta, v)
+      writeSigs(s, meta, v)
       // sign from the WRITTEN sig table so the (expensive) signature
       // projection is not recomputed for the postings pass
-      writeIndex(spark.read.parquet(s"$v/sigs").drop("_pb"))
+      writeIndex(postings(spark.read.parquet(s"$v/sigs").drop("_pb")), meta, v)
     }
     writeMeta(dir, meta)
     new StandingCorpus(spark, dir, meta)
@@ -307,67 +327,30 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     * the ceiling (the measurement contrast BenchIncremental exposes),
     * None = the size-gated default. */
   private[graft] var keyPushdownOverride: Option[Boolean] = None
-  private def pushKeys(sizeGate: Boolean): Boolean =
-    keyPushdownOverride.getOrElse(sizeGate)
 
   private def ckpt(df: DataFrame): DataFrame =
     org.apache.spark.sql.graftbridge.CheckpointStats.strip(df.localCheckpoint(true))
 
-  /** Run `body` with spark.sql.parquet.pushdown.inFilterThreshold raised
-    * to MaxPushedKeys when a pushed-key probe is active: Spark 4 converts
-    * an In with more values than the threshold (default 10) into a single
-    * gteq/lteq RANGE predicate for parquet pushdown, and probe keys are
-    * uniform hashes — the range spans the whole domain and prunes no row
-    * groups. Raising the threshold keeps the In an OR-of-eq set so
-    * row-group min/max pruning actually fires at real batch sizes
-    * (round-14 advice). Scoped to the probe action and restored after —
-    * the session-wide default stays put for every other query (e.g. the
-    * bucketed-probe IN lists, where a 32k-term parquet predicate would
-    * tax planning for nothing). */
-  // REFERENCE-COUNTED push-conf window: concurrent classifies (the
-  // read-locked serving path) each open a window, and a naive
-  // set/restore would race — one probe's restore could drop the raised
-  // threshold out from under another probe's planning (results are
-  // unaffected, but the row-group pruning the push exists for would
-  // silently lapse). The conf is raised on the first open and restored
-  // when the last window closes.
-  private val pushGate = new Object
-  private var pushDepth = 0
-  private var pushPrev: Option[String] = None
-  private def withPushConf[A](push: Boolean)(body: => A): A =
-    if (!push) body
-    else {
-      val key = "spark.sql.parquet.pushdown.inFilterThreshold"
-      pushGate.synchronized {
-        if (pushDepth == 0) {
-          pushPrev = spark.conf.getOption(key)
-          spark.conf.set(key, MaxPushedKeys.toString)
-        }
-        pushDepth += 1
-      }
-      try body
-      finally pushGate.synchronized {
-        pushDepth -= 1
-        if (pushDepth == 0) pushPrev match {
-          case Some(v) => spark.conf.set(key, v)
-          case None => spark.conf.unset(key)
-        }
-      }
-    }
-
-  /** True when ANY standing table's pushed-key gate is open for this
-    * probe (fat layout or spec override) — the condition under which
-    * [[withPushConf]] must hold across the probe's actions. */
-  private def anyPushGateOpen: Boolean = keyPushdownOverride.getOrElse(
-    meta.pHash.toLong * HashRowsPerPart < meta.nDocs ||
-      meta.pIdx.toLong * IdxRowsPerPart < meta.nDocs * meta.bands ||
-      meta.pSig.toLong * SigRowsPerPart < meta.nDocs)
+  /** The session every standing-table read and driver-side frame goes
+    * through: cloned once from the caller's (inheriting its runtime
+    * confs) with the parquet In-filter threshold raised to
+    * MaxPushedKeys, so pushed key sets stay OR-of-eq predicates and
+    * row-group min/max pruning fires. A parquet scan takes that
+    * threshold from the session that read the table, so pushed-key
+    * probes keep it even inside plans rooted in the caller's session,
+    * while the caller's conf — and every unrelated query planned there
+    * — is never touched. */
+  private val probe: SparkSession = {
+    val s = org.apache.spark.sql.graftbridge.Bridge.cloneSession(spark)
+    s.conf.set("spark.sql.parquet.pushdown.inFilterThreshold", MaxPushedKeys.toString)
+    s
+  }
 
   private var version = meta.version
   private def vdir = s"$dir/v$version"
-  private var baseHashes = spark.read.parquet(s"$vdir/hashes")
-  private var baseSigs = spark.read.parquet(s"$vdir/sigs")
-  private var baseIndex = spark.read.parquet(s"$vdir/index")
+  private var baseHashes = probe.read.parquet(s"$vdir/hashes")
+  private var baseSigs = probe.read.parquet(s"$vdir/sigs")
+  private var baseIndex = probe.read.parquet(s"$vdir/index")
 
   // per-batch increments (each O(batch)); probes union them. Trickle
   // absorbs append driver-local rows wrapped as LocalRelations (zero
@@ -481,15 +464,6 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     eq.toDouble / n
   }
 
-  /** Driver twin of the Spark-side partition-bucket expressions (pbSig /
-    * pbIdx): xxhash64 of a long via the same XXH64 kernel Catalyst
-    * codegen calls. */
-  private def pbSigLocal(id: Long): Int = {
-    val p = meta.pSig.toLong
-    val h = org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(id, 42L)
-    (((h % p) + p) % p).toInt
-  }
-
   /** Sign + collect a trickle-sized batch in ONE job. None when the
     * batch exceeds trickleMaxDocs (bulk territory), a distributed delta
     * exists (the local fold could not see it), or any id is null (the
@@ -525,7 +499,7 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
   private def localDf(rows: Seq[org.apache.spark.sql.Row],
                       schema: org.apache.spark.sql.types.StructType): DataFrame = {
     import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.asJava, schema)
+    probe.createDataFrame(rows.asJava, schema)
   }
 
   private val hashSchema = org.apache.spark.sql.types.StructType(Seq(
@@ -574,15 +548,11 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
   /** The three-tier trickle classify folded on the driver: one pruned
     * standing read per tier, all joins against broadcast LocalRelations
     * of the batch's own keys, verdicts computed in-process. None = fall
-    * back to the distributed plan (over-bound fan-out). */
-  private def driverClassify(rows: Array[BatchRow], idCol: String)
-      : Option[DriverClassified] = withPushConf(anyPushGateOpen) {
-    // ^ ONE push-conf window across the whole classify: the exact tier
-    // below runs on its own driver thread concurrent with the candidate
-    // -> signature chain, and the per-tier conf set/restore would race
-    // across threads (same final value, but a probe could plan with the
-    // push off). Inside this window the per-tier withPushConf calls are
-    // idempotent no-ops.
+    * back to the distributed plan (over-bound fan-out). Reads only
+    * shared state that mutates under the owner's exclusive lock, so
+    * concurrent read-locked calls are safe; the exact tier's own driver
+    * thread plans in the probe session like the rest. */
+  private def driverClassify(rows: Array[BatchRow]): Option[DriverClassified] = {
     import org.apache.spark.sql.Row
     val lv = localView()
     // exact tier: which of the batch's md5s exist in the standing
@@ -593,26 +563,14 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     val hs = rows.iterator.map(_.h).filter(_ != null).toSeq.distinct
     val standingHF = new java.util.concurrent.FutureTask[Set[String]](() =>
       if (hs.isEmpty) Set.empty
-      else {
-        val pbs = hs.map(h =>
-          (java.lang.Long.parseLong(h.substring(0, 15), 16) % meta.pHash).toInt).distinct
-        val fat = pushKeys(meta.pHash.toLong * HashRowsPerPart < meta.nDocs)
-        val pruned0 = baseHashes.filter(col("_pb").isin(pbs: _*))
-        val pruned =
-          if (fat && hs.size <= MaxPushedKeys) pruned0.filter(col("_h").isin(hs: _*))
-          else pruned0
-        withPushConf(fat) {
-          pruned.join(broadcast(localDf(hs.map(Row(_)), hashSchema)),
-              Seq("_h"), "left_semi")
-            .select("_h").distinct().collect().map(_.getString(0)).toSet
-        }
-      })
+      else baseHashesFor(hs.iterator)
+        .join(broadcast(localDf(hs.map(Row(_)), hashSchema)), Seq("_h"), "left_semi")
+        .select("_h").distinct().collect().map(_.getString(0)).toSet)
     val hThread = new Thread(standingHF, "graft-trickle-exact")
     hThread.setDaemon(true)
     hThread.start()
     // the fallback returns must not leave the exact-tier job in flight
-    // (its plan would race the conf restore; the caller may start the
-    // distributed fallback immediately after)
+    // (the caller may start the distributed fallback immediately after)
     def awaitExact(): Set[String] =
       try standingHF.get()
       catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
@@ -624,21 +582,12 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     val standingByTriple: Map[(Int, Long, Long), Array[Long]] =
       if (triples.isEmpty) Map.empty
       else {
-        val ks = triples.map(_._2).distinct.toSeq
-        val p = meta.pIdx.toLong
-        val pbs = ks.map(k => (((k % p) + p) % p).toInt).distinct
-        val fat = pushKeys(meta.pIdx.toLong * IdxRowsPerPart < meta.nDocs * meta.bands)
-        val pruned0 = baseIndex.filter(col("_pb").isin(pbs: _*))
-        val pruned =
-          if (fat && ks.size <= MaxPushedKeys) pruned0.filter(col("key64").isin(ks: _*))
-          else pruned0
         val localT = localDf(
           triples.map(t => Row(t._1, t._2, t._3)).toSeq, tripleSchema)
-        val matched = withPushConf(fat) {
-          pruned.join(broadcast(localT), Seq("band", "key64", "key64b"))
-            .select("band", "key64", "key64b", "id")
-            .limit(PostingsCollectBound + 1).collect()
-        }
+        val matched = baseIndexFor(triples.iterator.map(_._2).distinct)
+          .join(broadcast(localT), Seq("band", "key64", "key64b"))
+          .select("band", "key64", "key64b", "id")
+          .limit(PostingsCollectBound + 1).collect()
         if (matched.length > PostingsCollectBound) { awaitExact(); return None }
         matched.groupBy(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
           .map { case (t, rs) => t -> rs.map(_.getLong(3)) }
@@ -667,22 +616,15 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     val standSig: Map[Long, Seq[Array[Long]]] =
       if (standIds.isEmpty) Map.empty
       else {
-        val pbs = standIds.map(pbSigLocal).distinct.toSeq
-        val fat = pushKeys(meta.pSig.toLong * SigRowsPerPart < meta.nDocs)
-        val pruned0 = baseSigs.filter(col("_pb").isin(pbs: _*))
-        val pruned =
-          if (fat) pruned0.filter(col("doc_id").isin(standIds.toSeq: _*))
-          else pruned0
         val localI = localDf(standIds.map(Row(_)).toSeq, idSchema)
-        withPushConf(fat) {
-          pruned.join(broadcast(localI), Seq("doc_id"))
-            .select("doc_id", "sig").collect()
-            .groupBy(_.getLong(0))
-            .map { case (id, rs) =>
-              id -> rs.toSeq.map(r =>
-                if (r.isNullAt(1)) null else r.getSeq[Long](1).toArray)
-            }
-        }
+        baseSigsFor(standIds.iterator)
+          .join(broadcast(localI), Seq("doc_id"))
+          .select("doc_id", "sig").collect()
+          .groupBy(_.getLong(0))
+          .map { case (id, rs) =>
+            id -> rs.toSeq.map(r =>
+              if (r.isNullAt(1)) null else r.getSeq[Long](1).toArray)
+          }
       }
     def sigsOf(id: Long): Iterator[Array[Long]] =
       (standSig.getOrElse(id, Nil).iterator ++
@@ -781,85 +723,86 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
   private[graft] def fullIndex: DataFrame =
     unionAll(baseIndex.select("id", "band", "key64", "key64b"), deltaIndex.toSeq)
 
-  /** Pruned standing hash rows for a batch: read only the partitions the
-    * batch's own md5 values can land in. */
-  /** Each probe collects the batch's own PROBE KEYS (one tiny job over a
-    * materialized batch-sized frame), derives the touched partition
-    * buckets driver-side, and prunes the standing read on `_pb`. When a
-    * table has grown PAST ITS PARTITION CEILING (MaxParts reached, so
-    * rows-per-partition exceed the per-table target and the
-    * partition-level bound alone would grow linearly with the corpus),
-    * the key set is ALSO pushed down as a parquet In filter: partition
-    * files are key-sorted with small row groups, so row-group min/max
-    * pruning bounds the rows read inside a fat partition by
+  /** The one pruned read of a base table for a driver-side set of
+    * DISTINCT probe keys: only the partitions (`_pb`) the keys can land
+    * in, via the driver twin `pb` of the table's Spark-side bucket
+    * expression. When the table has grown PAST ITS PARTITION CEILING
+    * (`pastCeiling`: MaxParts reached, so rows-per-partition exceed the
+    * per-table target and the partition-level bound alone would grow
+    * linearly with the corpus), a key set of at most MaxPushedKeys is
+    * ALSO pushed down as a parquet In filter: partition files are
+    * key-sorted with small row groups, so row-group min/max pruning
+    * bounds the rows read inside a fat partition by
     * (keys x rows-per-row-group) — corpus-independent again. Below the
     * ceiling the key push is deliberately OFF: with one row group per
     * file it can prune nothing, and evaluating it costs extra reads
     * (dictionary pages + column indexes — measured 3x the probe bytes at
-    * spec scale). Null keys are dropped: a null text hashes to a null
+    * spec scale). `keys` is consumed once; the driver holds the bucket
+    * set and at most MaxPushedKeys + 1 keys. Filters only remove rows
+    * that cannot join; the trickle==bulk identity is unaffected
+    * (StandingCorpusSpec). */
+  private def keyPruned[K](base: DataFrame, keyCol: String, pastCeiling: Boolean,
+                           keys: Iterator[K])(pb: K => Int): DataFrame = {
+    val pbs = scala.collection.mutable.LinkedHashSet.empty[Int]
+    val pushed = scala.collection.mutable.ArrayBuffer.empty[K]
+    keys.foreach { k =>
+      pbs += pb(k)
+      if (pushed.length <= MaxPushedKeys) pushed += k
+    }
+    val pruned = base.filter(col("_pb").isin(pbs.toSeq: _*))
+    if (keyPushdownOverride.getOrElse(pastCeiling) && pushed.nonEmpty &&
+      pushed.length <= MaxPushedKeys)
+      pruned.filter(col(keyCol).isin(pushed.toSeq: _*))
+    else pruned
+  }
+
+  /** Base hash rows for md5 hex keys. Driver twin of pbHash: 15 hex
+    * chars < 2^60, so the unsigned conv() parse is an exact
+    * Long.parseLong and pmod degenerates to %. */
+  private def baseHashesFor(hs: Iterator[String]): DataFrame =
+    keyPruned(baseHashes, "_h", meta.pHash.toLong * HashRowsPerPart < meta.nDocs, hs) { h =>
+      (java.lang.Long.parseLong(h.substring(0, 15), 16) % meta.pHash).toInt
+    }
+
+  /** Base postings for band key64 values (driver twin of pbIdx). */
+  private def baseIndexFor(ks: Iterator[Long]): DataFrame =
+    keyPruned(baseIndex, "key64",
+      meta.pIdx.toLong * IdxRowsPerPart < meta.nDocs * meta.bands, ks) { k =>
+      val p = meta.pIdx.toLong
+      (((k % p) + p) % p).toInt
+    }
+
+  /** Base signatures for doc ids. Driver twin of pbSig: xxhash64 of a
+    * long via the same XXH64 kernel Catalyst codegen calls. */
+  private def baseSigsFor(ids: Iterator[Long]): DataFrame =
+    keyPruned(baseSigs, "doc_id", meta.pSig.toLong * SigRowsPerPart < meta.nDocs, ids) { id =>
+      val p = meta.pSig.toLong
+      val h = org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(id, 42L)
+      (((h % p) + p) % p).toInt
+    }
+
+  /** Distinct non-null values of a frame's single column, streamed to
+    * the driver. Null keys are dropped: a null text hashes to a null
     * key, and the matching standing rows are definitionally absent, so
     * the row falls through to 'new' exactly as the bulk path classifies
-    * it — not NPE the probe. All filters only remove rows that cannot
-    * join; the trickle==bulk identity is unaffected
-    * (StandingCorpusSpec). */
-  private[graft] def prunedHashes(batchHashes: DataFrame): DataFrame = {
-    val hs = batchHashes.select("_h").distinct().collect().iterator
-      .filterNot(_.isNullAt(0)).map(_.getString(0)).toSeq
-    // driver-side twin of pbHash: 15 hex chars < 2^60, so the unsigned
-    // conv() parse is an exact Long.parseLong and pmod degenerates to %
-    val pbs = hs.map(h =>
-      (java.lang.Long.parseLong(h.substring(0, 15), 16) % meta.pHash).toInt).distinct
-    val fat = pushKeys(meta.pHash.toLong * HashRowsPerPart < meta.nDocs)
-    val pruned = baseHashes.filter(col("_pb").isin(pbs: _*))
-    val keyed =
-      if (fat && hs.nonEmpty && hs.size <= MaxPushedKeys)
-        pruned.filter(col("_h").isin(hs: _*))
-      else pruned
-    unionAll(keyed.select("_h"), deltaHashes.toSeq)
+    * it — not NPE the probe. */
+  private def distinctKeys[K](keys: DataFrame)(get: org.apache.spark.sql.Row => K): Iterator[K] = {
+    import scala.jdk.CollectionConverters._
+    keys.distinct().toLocalIterator().asScala.filterNot(_.isNullAt(0)).map(get)
   }
 
-  /** Pruned standing postings for a batch's band keys. */
-  private[graft] def prunedIndex(batchKeys: DataFrame): DataFrame = {
-    val ks = batchKeys.select("key64").distinct().collect().iterator
-      .filterNot(_.isNullAt(0)).map(_.getLong(0)).toSeq
-    val p = meta.pIdx.toLong
-    val pbs = ks.map(k => (((k % p) + p) % p).toInt).distinct
-    val fat = pushKeys(meta.pIdx.toLong * IdxRowsPerPart < meta.nDocs * meta.bands)
-    val pruned = baseIndex.filter(col("_pb").isin(pbs: _*))
-    val keyed =
-      if (fat && ks.nonEmpty && ks.size <= MaxPushedKeys)
-        pruned.filter(col("key64").isin(ks: _*))
-      else pruned
-    unionAll(keyed.select("id", "band", "key64", "key64b"), deltaIndex.toSeq)
-  }
-
-  /** Pruned standing signatures for a candidate-id frame. The partition
-    * bucket is xxhash64(id) — evaluated in Spark on both sides (never
-    * re-implemented driver-side) — so the collect carries (bucket, id)
-    * pairs and the id set doubles as the pushed key filter when the sig
-    * table is past its partition ceiling. */
-  private[graft] def prunedSigs(candIds: DataFrame): DataFrame = {
-    val idc = candIds.columns.head
-    val fat = pushKeys(meta.pSig.toLong * SigRowsPerPart < meta.nDocs)
-    val rows = candIds
-      .select(pbSigCol(idc).as("_pb"), col(idc).cast("long").as("_id"))
-      .distinct().limit(MaxPushedKeys + 1).collect()
-      .filterNot(_.isNullAt(0))
-    val overflow = rows.length > MaxPushedKeys
-    val pbs =
-      if (!overflow) rows.iterator.map(_.getInt(0)).toSeq.distinct
-      else candIds.select(pbSigCol(idc).as("_pb")).distinct().collect()
-        .iterator.filterNot(_.isNullAt(0)).map(_.getInt(0)).toSeq
-    val pruned = baseSigs.filter(col("_pb").isin(pbs: _*))
-    val keyed =
-      if (fat && !overflow && rows.nonEmpty)
-        pruned.filter(col("doc_id").isin(rows.map(_.getLong(1)).toSeq: _*))
-      else pruned
-    unionAll(keyed.select("doc_id", "sig"), deltaSigs.toSeq)
-  }
-
-  private def pbSigCol(idColName: String) =
-    pmod(xxhash64(col(idColName)), lit(meta.pSig.toLong)).cast("int")
+  /** Pruned standing rows (base + deltas) for the Spark trickle plan,
+    * keyed by a batch-sized frame's hashes, band keys or candidate ids. */
+  private[graft] def prunedHashes(batchHashes: DataFrame): DataFrame =
+    unionAll(baseHashesFor(distinctKeys(batchHashes.select("_h"))(_.getString(0)))
+      .select("_h"), deltaHashes.toSeq)
+  private[graft] def prunedIndex(batchKeys: DataFrame): DataFrame =
+    unionAll(baseIndexFor(distinctKeys(batchKeys.select("key64"))(_.getLong(0)))
+      .select("id", "band", "key64", "key64b"), deltaIndex.toSeq)
+  private[graft] def prunedSigs(candIds: DataFrame): DataFrame =
+    unionAll(baseSigsFor(distinctKeys(
+        candIds.select(col(candIds.columns.head).cast("long")))(_.getLong(0)))
+      .select("doc_id", "sig"), deltaSigs.toSeq)
 
   /** Classify one batch of (idCol, textCol) docs against the standing
     * corpus: 'exact' / 'near' / 'new' per id, bit-identical to
@@ -870,12 +813,7 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
   def classify(batchDocs: DataFrame, idCol: String = "doc_id",
                textCol: String = "text"): DataFrame = {
     maybeSwapCompacted()
-    val fast = collectBatch(batchDocs, idCol, textCol)
-      .flatMap(driverClassify(_, idCol))
-    fast match {
-      case Some(c) => renameId(c.statuses, idCol)
-      case None => classifyKeepingSigs(batchDocs, idCol, textCol)._3
-    }
+    classifyShared(batchDocs, idCol, textCol)
   }
 
   /** True when a background compaction finished (or failed) and awaits
@@ -896,18 +834,21 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     * difference is that the compaction swap is skipped (the caller swaps
     * under its write lock via [[swapCompactedIfReady]]), so no standing
     * state mutates on this path. The shared state it reads is safe
-    * under concurrency: localView is init-synchronized, the push-conf
-    * window is reference-counted, and deltas/meta/base tables only
-    * mutate under the caller's exclusive lock. */
+    * under concurrency: localView is init-synchronized, probes plan in
+    * the corpus's own probe session and set no conf anywhere, and
+    * deltas/meta/base tables only mutate under the caller's exclusive
+    * lock. */
   def classifyShared(batchDocs: DataFrame, idCol: String = "doc_id",
-                     textCol: String = "text"): DataFrame = {
-    val fast = collectBatch(batchDocs, idCol, textCol)
-      .flatMap(driverClassify(_, idCol))
-    fast match {
+                     textCol: String = "text"): DataFrame =
+    fastClassify(batchDocs, idCol, textCol) match {
       case Some(c) => renameId(c.statuses, idCol)
-      case None => classifyKeepingSigs(batchDocs, idCol, textCol, swap = false)._3
+      case None => classifyKeepingSigs(batchDocs, idCol, textCol)._3
     }
-  }
+
+  /** The driver fast path: None when the batch needs the Spark plan. */
+  private def fastClassify(batchDocs: DataFrame, idCol: String,
+                           textCol: String): Option[DriverClassified] =
+    collectBatch(batchDocs, idCol, textCol).flatMap(driverClassify)
 
   private def renameId(statuses: DataFrame, idCol: String): DataFrame =
     if (idCol == "doc_id") statuses
@@ -917,18 +858,14 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     * triple so [[classifyAbsorb]] can absorb WITHOUT re-shingling and
     * re-signing the batch (the signature projection is the single most
     * expensive batch-sized compute in the loop). The SPARK fallback form
-    * — the driver fast path handles trickle batches before this runs. */
+    * — the driver fast path handles trickle batches before this runs.
+    * Never swaps: every caller has swapped (or must not) at entry. */
   private def classifyKeepingSigs(batchDocs: DataFrame, idCol: String,
-                                  textCol: String, swap: Boolean = true)
-      : (DataFrame, DataFrame, DataFrame) = {
-    if (swap) maybeSwapCompacted()
+                                  textCol: String): (DataFrame, DataFrame, DataFrame) = {
     val b = ckpt(batchDocs.select(col(idCol).cast("long").as(idCol),
       col(textCol).as(textCol)))
     val batchSigs = ckpt(sign(b, meta, idCol, textCol))
-    val st = withPushConf(anyPushGateOpen) {
-      ckpt(classifyPlan(b, batchSigs, idCol, textCol))
-    }
-    (b, batchSigs, st)
+    (b, batchSigs, ckpt(classifyPlan(b, batchSigs, idCol, textCol)))
   }
 
   /** The classify plan (unmaterialized — spec hooks inspect its scans).
@@ -968,31 +905,20 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     }
   }
 
-  /** Absorb a classified batch: its 'new' docs join the standing corpus
-    * (hashes, signatures, and postings APPENDED UNDER THE CAP), so a
-    * later batch repeating them classifies as a duplicate. `statuses` is
-    * [[classify]]'s output for this batch. Per-batch cost is O(batch):
-    * only the increments are checkpointed, never the standing state. */
-  def absorb(batchDocs: DataFrame, statuses: DataFrame,
-             idCol: String = "doc_id", textCol: String = "text"): Unit =
-    absorbImpl(batchDocs, statuses, idCol, textCol, precomputedSigs = null)
-
-  private def absorbImpl(batchDocs: DataFrame, statuses: DataFrame,
-                         idCol: String, textCol: String,
-                         precomputedSigs: DataFrame): Unit = {
-    maybeSwapCompacted()
+  /** Spark-side absorb of a batch [[classifyKeepingSigs]] classified:
+    * its 'new' docs join the standing corpus (hashes, signatures, and
+    * postings APPENDED UNDER THE CAP), so a later batch repeating them
+    * classifies as a duplicate. Per-batch cost is O(batch): only the
+    * increments are checkpointed, never the standing state. */
+  private def sparkAbsorb(b: DataFrame, batchSigs: DataFrame, statuses: DataFrame,
+                          idCol: String, textCol: String): Unit = {
     val newIds = statuses.filter(col("status") === "new").select(col(idCol))
-    val newDocs = batchDocs.select(col(idCol).cast("long").as(idCol),
-        col(textCol).as(textCol))
-      .join(newIds, Seq(idCol), "left_semi")
-    // classifyAbsorb hands its already-materialized batch signatures
-    // through — filtering them to the new ids is row-identical to
-    // re-signing newDocs (signatures are a pure function of the text)
-    // and skips the loop's most expensive batch-sized recompute
-    val newSigs = ckpt(
-      if (precomputedSigs != null)
-        precomputedSigs.join(newIds, Seq(idCol), "left_semi")
-      else sign(newDocs, meta, idCol, textCol))
+    val newDocs = b.join(newIds, Seq(idCol), "left_semi")
+    // filtering the already-materialized batch signatures to the new
+    // ids is row-identical to re-signing newDocs (signatures are a pure
+    // function of the text) and skips the loop's most expensive
+    // batch-sized recompute
+    val newSigs = ckpt(batchSigs.join(newIds, Seq(idCol), "left_semi"))
     val nNew = newSigs.count()
     if (nNew > 0) {
       deltaHashes += ckpt(newDocs.select(md5(col(textCol)).as("_h")))
@@ -1013,7 +939,7 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
             .groupBy(keys.map(col): _*).agg(count(lit(1)).as("_cnt"))
           Lsh.admitUnderCap(newKeys, standCnt, meta.maxBucketSize)
         }
-      deltaIndex += withPushConf(anyPushGateOpen)(ckpt(admitted))
+      deltaIndex += ckpt(admitted)
       // a distributed delta blinds the driver fold — later trickle
       // probes fall back to the Spark plan until a compaction folds it
       deltasAllLocal = false
@@ -1027,22 +953,21 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     }
   }
 
-  /** [[classify]] + [[absorb]] in one call — the streaming micro-batch
-    * step. Returns the materialized statuses. Shares the batch's
-    * materialized signatures between the two phases (absorb never
-    * re-shingles). */
+  /** [[classify]] plus absorb in one call — the streaming micro-batch
+    * step: the batch's 'new' docs join the standing corpus, so a later
+    * batch repeating them classifies as a duplicate. Returns the
+    * materialized statuses. Shares the batch's materialized signatures
+    * between the two phases (absorb never re-shingles). */
   def classifyAbsorb(batchDocs: DataFrame, idCol: String = "doc_id",
                      textCol: String = "text"): DataFrame = {
     maybeSwapCompacted()
-    val fast = collectBatch(batchDocs, idCol, textCol)
-      .flatMap(driverClassify(_, idCol))
-    fast match {
+    fastClassify(batchDocs, idCol, textCol) match {
       case Some(c) =>
         driverAbsorb(c)
         renameId(c.statuses, idCol)
       case None =>
         val (b, batchSigs, st) = classifyKeepingSigs(batchDocs, idCol, textCol)
-        absorbImpl(b, st, idCol, textCol, precomputedSigs = batchSigs)
+        sparkAbsorb(b, batchSigs, st, idCol, textCol)
         st
     }
   }
@@ -1058,7 +983,9 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     val failed = new java.util.concurrent.atomic.AtomicReference[Throwable](null)
     var thread: Thread = _
   }
-  private var pendingCompaction: Option[PendingCompaction] = None
+  // volatile: compactionReady reads it from serving threads without the
+  // owner's lock
+  @volatile private var pendingCompaction: Option[PendingCompaction] = None
 
   /** Write the three standing tables for `grown` under its version dir.
     * Pure write — no mutable state touched (safe off-thread). Each
@@ -1077,19 +1004,11 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     // from under the builder
     val nv = s"$dir/.build-v${grown.version}"
     deleteRecursively(new java.io.File(nv))
-    writePartitioned(hashes,
-      pmod(conv(substring(col("_h"), 1, 15), 16, 10).cast("long"),
-        lit(grown.pHash.toLong)).cast("int"), grown.pHash, s"$nv/hashes",
-      col("_h"), grown.nDocs, HashRowsPerPart)
+    writeHashes(hashes, grown, nv)
     System.gc()
-    writePartitioned(sigs,
-      pmod(xxhash64(col("doc_id")), lit(grown.pSig.toLong)).cast("int"),
-      grown.pSig, s"$nv/sigs", col("doc_id"), grown.nDocs, SigRowsPerPart)
+    writeSigs(sigs, grown, nv)
     System.gc()
-    writePartitioned(index,
-      pmod(col("key64"), lit(grown.pIdx.toLong)).cast("int"),
-      grown.pIdx, s"$nv/index", col("key64"),
-      grown.nDocs * grown.bands, IdxRowsPerPart)
+    writeIndex(index, grown, nv)
     System.gc()
     val finalDir = new java.io.File(s"$dir/v${grown.version}")
     if (!new java.io.File(nv).renameTo(finalDir))
@@ -1135,9 +1054,9 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
         // ingest thread's swap re-opens three partitioned tables
         // (tens of thousands of dirs), and a cold listing inside the
         // next measured batch cost ~50 s at 8M docs — listed on this
-        // thread, the swap's spark.read hits the cache
+        // thread, the swap's probe.read hits the cache
         Seq("hashes", "sigs", "index").foreach { t =>
-          spark.read.parquet(s"$dir/v${p.grown.version}/$t")
+          probe.read.parquet(s"$dir/v${p.grown.version}/$t")
         }
       }
       catch { case t: Throwable => p.failed.set(t) }
@@ -1172,9 +1091,9 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
         // the live in-memory meta keeps the current total (round-14
         // advice: a crash after this write must not overcount)
         writeMeta(dir, meta.copy(nDocs = p.grown.nDocs))
-        baseHashes = spark.read.parquet(s"$vdir/hashes")
-        baseSigs = spark.read.parquet(s"$vdir/sigs")
-        baseIndex = spark.read.parquet(s"$vdir/index")
+        baseHashes = probe.read.parquet(s"$vdir/hashes")
+        baseSigs = probe.read.parquet(s"$vdir/sigs")
+        baseIndex = probe.read.parquet(s"$vdir/index")
         deltaHashes.remove(0, p.nDeltas)
         deltaSigs.remove(0, p.nDeltas)
         deltaIndex.remove(0, p.nDeltas)
@@ -1223,9 +1142,9 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     val old = vdir
     meta = grown
     version = grown.version
-    baseHashes = spark.read.parquet(s"$vdir/hashes")
-    baseSigs = spark.read.parquet(s"$vdir/sigs")
-    baseIndex = spark.read.parquet(s"$vdir/index")
+    baseHashes = probe.read.parquet(s"$vdir/hashes")
+    baseSigs = probe.read.parquet(s"$vdir/sigs")
+    baseIndex = probe.read.parquet(s"$vdir/index")
     deltaHashes.clear(); deltaSigs.clear(); deltaIndex.clear()
     localDeltas.clear(); lvCache = null; deltasAllLocal = true
     deltaBatches = 0

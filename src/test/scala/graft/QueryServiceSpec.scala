@@ -177,6 +177,50 @@ class QueryServiceSpec extends SparkSpec {
     }
   }
 
+  test("a handler that throws answers 500 with a JSON error envelope, not a dropped connection") {
+    import spark.implicits._
+    val docs = (0L until 60L).map { i =>
+      (i, (0 until 25).map(w => s"w${(i * 7 + w) % 97}").mkString(" "))
+    }.toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("graft-dedup-http-500").toString
+    val standing = graft.operators.StandingCorpus.build(docs, null, dir)
+    val lshEng = QueryEngine.build(
+      spark.read.parquet(s"$testDataDir/documents.parquet"))
+    val server = QueryService.serve(lshEng, None, Some(standing), port = 0)
+    try {
+      val port = server.getAddress.getPort
+      val client = HttpClient.newHttpClient()
+      def send(b: HttpRequest.Builder): (Int, String) = {
+        val resp = client.send(
+          b.uri(URI.create(s"http://127.0.0.1:$port/dedup")).build(),
+          HttpResponse.BodyHandlers.ofString())
+        (resp.statusCode(), resp.body())
+      }
+      val probe = s"""{"docs":[{"id":7000,"text":"${docs.head().getString(1)}"}],"absorb":false}"""
+      assert(send(HttpRequest.newBuilder().POST(HttpRequest.BodyPublishers.ofString(probe)))
+        === ((200, """{"statuses":[{"id":7000,"status":"exact"}]}""")))
+      assert(send(HttpRequest.newBuilder().GET())
+        === ((405, """{"error":"POST required"}""")))
+      assert(send(HttpRequest.newBuilder().POST(HttpRequest.BodyPublishers.ofString("""{"docs":[]}""")))
+        === ((400, """{"error":"missing or empty docs"}""")))
+      // the standing tables vanish under a live server: the classify's
+      // Spark read throws inside the handler
+      def rm(f: java.io.File): Unit = {
+        if (f.isDirectory) f.listFiles().foreach(rm)
+        f.delete()
+      }
+      rm(new java.io.File(s"$dir/v1"))
+      val (code, body) =
+        send(HttpRequest.newBuilder().POST(HttpRequest.BodyPublishers.ofString(probe)))
+      assert(code == 500, body)
+      val err = mapper.readTree(body).get("error")
+      assert(err != null && err.isTextual && err.asText().nonEmpty, body)
+    } finally {
+      server.stop(0)
+      lshEng.close()
+    }
+  }
+
   test("POST /vquery serves vector probes: served tier answers, errors enveloped") {
     import org.apache.spark.sql.functions.col
     // round 12: the embedding-side probe over the same HTTP server — a

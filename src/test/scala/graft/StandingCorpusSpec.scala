@@ -181,6 +181,84 @@ class StandingCorpusSpec extends SparkSpec {
     assert(again === Seq((1100L, "exact")))
   }
 
+  test("read-locked classifies racing an absorb keep serial verdicts and never raise the caller's threshold") {
+    val dir = tmpDir()
+    val sc = StandingCorpus.build(mkDocs(0L until 200L), null, dir)
+    sc.keyPushdownOverride = Some(true) // every tier runs its pushed-key probe
+    val base = mkDocs(Seq(0L, 5L, 10L, 15L)).select(col("text")).as[String].collect()
+    // per batch: an exact copy, a near-dup and a fresh text — none shares
+    // a shingle with the absorbed batch, so the race cannot move a verdict
+    val probes = base.indices.map { j =>
+      Seq((2000L + 10 * j, base(j)),
+        (2001L + 10 * j, base(j).split(" ").dropRight(1).mkString(" ") + s" y$j"),
+        (2002L + 10 * j, (0 until 30).map(w => s"cp${j}_$w").mkString(" ")))
+        .toDF("doc_id", "text")
+    }
+    val absorbed = (0 until 4).map(i => (3000L + i, (0 until 30).map(w => s"ab${i}_$w").mkString(" ")))
+      .toDF("doc_id", "text")
+    val serial = probes.map(p => statuses(sc.classifyShared(p)))
+    assert(serial.forall(_.map(_._2) == Seq("exact", "near", "new")), serial)
+
+    val key = "spark.sql.parquet.pushdown.inFilterThreshold"
+    val raised = StandingCorpus.MaxPushedKeys.toString
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    def sample(): Unit = seen.add(spark.conf.getOption(key).getOrElse("unset"))
+    val listener = new SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = sample()
+    }
+    val lock = new java.util.concurrent.locks.ReentrantReadWriteLock()
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(probes.size + 2)
+    @volatile var racing = true
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // a direct sampler too: listener events arrive asynchronously
+      val sampler = pool.submit(new Runnable {
+        def run(): Unit = { go.await(); while (racing) { sample(); Thread.sleep(1) } }
+      })
+      def locked[A](l: java.util.concurrent.locks.Lock)(body: => A) =
+        pool.submit(new java.util.concurrent.Callable[A] {
+          def call(): A = { go.await(); l.lock(); try body finally l.unlock() }
+        })
+      val classifies = probes.map(p => locked(lock.readLock())(statuses(sc.classifyShared(p))))
+      val absorb = locked(lock.writeLock())(statuses(sc.classifyAbsorb(absorbed)))
+      go.countDown()
+      val concurrent = classifies.map(_.get(300, java.util.concurrent.TimeUnit.SECONDS))
+      assert(absorb.get(300, java.util.concurrent.TimeUnit.SECONDS).forall(_._2 == "new"))
+      racing = false
+      sampler.get()
+      assert(concurrent === serial, "concurrent verdicts must equal the serial ones")
+      Thread.sleep(300) // let the listener bus drain
+    } finally {
+      racing = false
+      spark.sparkContext.removeSparkListener(listener)
+      pool.shutdownNow()
+    }
+    val raisedReads = seen.toArray.count(_ == raised)
+    assert(!seen.isEmpty)
+    assert(raisedReads == 0,
+      s"$raisedReads of ${seen.size} reads saw the caller session's $key raised to $raised")
+    // the absorbed batch is visible afterwards
+    assert(statuses(sc.classify(absorbed)).forall(_._2 == "exact"))
+  }
+
+  test("a parallel build whose index write fails keeps a writer's error as suppressed and releases its checkpoint") {
+    // a regular file where the version dir belongs: the index write on
+    // the calling thread fails, and so do the hashes and sigs writes on
+    // their own threads
+    val dir = tmpDir()
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(dir, "v1"))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[Throwable](StandingCorpus.build(mkDocs(0L until 20L), null, dir))
+    def chain(t: Throwable): Iterator[Throwable] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+    assert(e.getSuppressed.exists(
+      chain(_).exists(_.isInstanceOf[org.apache.hadoop.fs.ParentNotDirectoryException])),
+      s"writer error lost: $e")
+    assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).isEmpty,
+      "the signature checkpoint must be released on the failure path")
+  }
+
   test("Lsh.admitUnderCap equals capBuckets over the grown union for monotone ids") {
     // the one-shared-owner pin (round-13 verdict #5): the append-time
     // admit discipline and the batch re-cap must be the same semantics
