@@ -75,8 +75,11 @@ object BenchDecade {
     val tS = System.nanoTime()
     eng.saveBucketed(table, buckets = 64)
     val saveSec = (System.nanoTime() - tS) / 1e9
+    // one table handle for every sample: the bucket stats are cached per
+    // handle, so a fresh handle per sample would rebuild them each time
+    val bucketedTable = spark.table(table)
     val bucketed100 = medianOf(s"x_lsh_bucketed_batch100_sec_$tag")(() =>
-      graft.core.Lsh.queryBatchBucketed(eng.sigs, spark.table(table), qDf(100),
+      graft.core.Lsh.queryBatchBucketed(eng.sigs, bucketedTable, qDf(100),
         k = 5, maxCandidates = 2000).count())
     eng.serveFromBucketed(table)
     val someSigs = eng.sigs.filter(col("doc_id") < 30)

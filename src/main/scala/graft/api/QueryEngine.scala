@@ -215,10 +215,16 @@ final class QueryEngine private (
       .write.mode("overwrite").parquet(s"$dir/signatures")
     index.repartitionByRange(shards, col("band"), col("key64"))
       .write.mode("overwrite").parquet(s"$dir/postings")
+    writeParams(dir)
+  }
+
+  /** The build params, plus a [[saveServing]] layout's bucket count. */
+  private def writeParams(dir: String, buckets: Option[Int] = None): Unit = {
     import spark.implicits._
-    Seq((params.bands, params.numPerm, params.maxBucketSize,
+    val rec = Seq((params.bands, params.numPerm, params.maxBucketSize,
       mpParams.kShingle, mpParams.byWord))
       .toDF("bands", "num_perm", "max_bucket_size", "k_shingle", "by_word")
+    buckets.fold(rec)(b => rec.withColumn("buckets", lit(b)))
       .coalesce(1).write.mode("overwrite").json(s"$dir/params")
   }
 
@@ -238,11 +244,17 @@ final class QueryEngine private (
     * effective under the probe's pushed key range. A pathologically hot
     * bucket lands in one file, but the bucket cap (Lsh.capBuckets)
     * already bounds bucket cardinality upstream. */
-  def saveBucketed(table: String, buckets: Int = 64): Unit = {
-    index.repartition(buckets, col("key64"))
-      .write.mode("overwrite")
-      .bucketBy(buckets, "key64")
-      .sortBy("key64", "band")
+  def saveBucketed(table: String, buckets: Int = 64): Unit =
+    writeBucketed(index, "key64", Seq("key64", "band"), table, buckets)
+
+  /** A bucketed table, one file per bucket (see [[saveBucketed]]);
+    * EXTERNAL at `path` when given. */
+  private def writeBucketed(df: DataFrame, bucketCol: String, sortCols: Seq[String],
+                            table: String, buckets: Int, path: Option[String] = None): Unit = {
+    val w = df.repartition(buckets, col(bucketCol)).write.mode("overwrite")
+    path.fold(w)(w.option("path", _))
+      .bucketBy(buckets, bucketCol)
+      .sortBy(sortCols.head, sortCols.tail: _*)
       .saveAsTable(table)
   }
 
@@ -277,23 +289,10 @@ final class QueryEngine private (
   def saveServing(dir: String, prefix: String, buckets: Int = 64): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS ${prefix}_postings")
     spark.sql(s"DROP TABLE IF EXISTS ${prefix}_sigs")
-    index.repartition(buckets, col("key64"))
-      .write.mode("overwrite")
-      .option("path", s"$dir/postings")
-      .bucketBy(buckets, "key64")
-      .sortBy("key64", "band")
-      .saveAsTable(s"${prefix}_postings")
-    sigs.repartition(buckets, col("doc_id"))
-      .write.mode("overwrite")
-      .option("path", s"$dir/sigs")
-      .bucketBy(buckets, "doc_id")
-      .sortBy("doc_id")
-      .saveAsTable(s"${prefix}_sigs")
-    import spark.implicits._
-    Seq((params.bands, params.numPerm, params.maxBucketSize,
-      mpParams.kShingle, mpParams.byWord, buckets))
-      .toDF("bands", "num_perm", "max_bucket_size", "k_shingle", "by_word", "buckets")
-      .coalesce(1).write.mode("overwrite").json(s"$dir/params")
+    writeBucketed(index, "key64", Seq("key64", "band"), s"${prefix}_postings", buckets,
+      Some(s"$dir/postings"))
+    writeBucketed(sigs, "doc_id", Seq("doc_id"), s"${prefix}_sigs", buckets, Some(s"$dir/sigs"))
+    writeParams(dir, Some(buckets))
   }
 }
 
@@ -404,17 +403,13 @@ object QueryEngine {
     * 16M-doc hot singles out of the corpus-heap GC regime. Batch/
     * uncapped probes on a lean engine still work (distributed plans over
     * the disk tables) but pay scan cost; the cached-index engine remains
-    * the batch tier. */
+    * the batch tier. A missing, unreadable or corrupt params record
+    * throws IllegalStateException. */
   def openServing(spark: SparkSession, dir: String, prefix: String): QueryEngine = {
-    val r = spark.read.json(s"$dir/params").head()
-    val lp = Lsh.Params(
-      bands = r.getAs[Long]("bands").toInt,
-      numPerm = r.getAs[Long]("num_perm").toInt,
-      maxBucketSize = r.getAs[Long]("max_bucket_size").toInt)
-    val mp = MinHashPipeline.Params(
-      kShingle = r.getAs[Long]("k_shingle").toInt,
-      byWord = r.getAs[Boolean]("by_word"))
-    val buckets = r.getAs[Long]("buckets").toInt
+    val (lp, mp, buckets) = readParams(spark, dir)
+      .collect { case (lp, mp, Some(b)) => (lp, mp, b) }
+      .getOrElse(throw new IllegalStateException(
+        s"no serving params record (with a bucket count) at $dir/params"))
     // re-register the external tables when this session's catalog lacks
     // them (fresh JVM): schema from the parquet footers, bucket spec from
     // the params record — the files already carry bucket-id names, so the
@@ -438,40 +433,43 @@ object QueryEngine {
     * memory-only worker state). Build params are read back from the
     * save-time `params` record so text signing and incremental growth
     * stay in the saved signatures' shingle space. Only an index saved
-    * WITHOUT a params record (pre-params layout) falls back to defaults;
-    * a present-but-unreadable record throws — silently defaulting there
-    * would hand queryText/addDocuments a mismatched shingle space, the
-    * exact garbage-scores failure the record exists to prevent. */
+    * WITHOUT a params record (pre-params layout) falls back to defaults. */
   def load(spark: SparkSession, dir: String): QueryEngine = {
     val sigs = spark.read.parquet(s"$dir/signatures").cache()
     val index = spark.read.parquet(s"$dir/postings").cache()
+    val (lp, mp, _) = readParams(spark, dir)
+      .getOrElse((Lsh.Params(), MinHashPipeline.Params(), None))
+    new QueryEngine(spark, sigs, index, lp, mp)
+  }
+
+  /** The one params-record reader: the saved build params and, for a
+    * [[QueryEngine.saveServing]] layout, its bucket count — None when
+    * `dir` has no record. A present-but-unreadable or corrupt record
+    * throws IllegalStateException: silently defaulting there would hand
+    * queryText/addDocuments a mismatched shingle space, the exact
+    * garbage-scores failure the record exists to prevent. */
+  private def readParams(spark: SparkSession, dir: String)
+      : Option[(Lsh.Params, MinHashPipeline.Params, Option[Int])] = {
     val paramsPath = new org.apache.hadoop.fs.Path(s"$dir/params")
     val fs = paramsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (lp, mp) =
-      if (!fs.exists(paramsPath)) (Lsh.Params(), MinHashPipeline.Params())
-      else {
-        val r =
-          try spark.read.json(s"$dir/params").head()
-          catch {
-            case e: Exception => throw new IllegalStateException(
-              s"unreadable index params at $dir/params — refusing to " +
-                "default (a mismatched shingle space silently corrupts " +
-                "scores); delete the params dir to force defaults", e)
-          }
-        try (Lsh.Params(
+    if (!fs.exists(paramsPath)) None
+    else try {
+      val r = spark.read.json(s"$dir/params").head()
+      Some((
+        Lsh.Params(
           bands = r.getAs[Long]("bands").toInt,
           numPerm = r.getAs[Long]("num_perm").toInt,
           maxBucketSize = r.getAs[Long]("max_bucket_size").toInt),
-          MinHashPipeline.Params(
-            kShingle = r.getAs[Long]("k_shingle").toInt,
-            byWord = r.getAs[Boolean]("by_word")))
-        catch {
-          case e: Exception => throw new IllegalStateException(
-            s"corrupt index params record at $dir/params — refusing to " +
-              "default (a mismatched shingle space silently corrupts " +
-              "scores); delete the params dir to force defaults", e)
-        }
-      }
-    new QueryEngine(spark, sigs, index, lp, mp)
+        MinHashPipeline.Params(
+          kShingle = r.getAs[Long]("k_shingle").toInt,
+          byWord = r.getAs[Boolean]("by_word")),
+        if (r.schema.fieldNames.contains("buckets")) Some(r.getAs[Long]("buckets").toInt)
+        else None))
+    } catch {
+      case e: Exception => throw new IllegalStateException(
+        s"unreadable or corrupt index params at $dir/params — refusing to " +
+          "default (a mismatched shingle space silently corrupts scores); " +
+          "delete the params dir to force defaults", e)
+    }
   }
 }

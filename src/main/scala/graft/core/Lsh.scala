@@ -48,12 +48,15 @@ object Lsh {
 
   /** Build the postings table `(id, band, key64, key64b)` with the
     * reference's bucket cap (minhash_lsh.py:42-57). */
-  def postings(sigs: DataFrame, idCol: String, sigCol: String, p: Params = Params()): DataFrame = {
-    val exploded = sigs.select(
+  def postings(sigs: DataFrame, idCol: String, sigCol: String, p: Params = Params()): DataFrame =
+    capBuckets(keyedPostings(sigs, idCol, sigCol, p), p.maxBucketSize)
+
+  /** The pre-cap postings: one keyed row per (id, band). */
+  private def keyedPostings(sigs: DataFrame, idCol: String, sigCol: String,
+                            p: Params): DataFrame =
+    withBucketKeys(sigs.select(
       col(idCol).cast("long").as("id"),
-      posexplode(bandSlices(col(sigCol), p)).as(Seq("band", "band_key")))
-    capBuckets(withBucketKeys(exploded), p.maxBucketSize)
-  }
+      posexplode(bandSlices(col(sigCol), p)).as(Seq("band", "band_key"))))
 
   /** [[postings]] plus a release thunk for its build scratch: the capped
     * plan consumes the exploded+hashed pre-cap postings THREE times (the
@@ -68,10 +71,7 @@ object Lsh {
     * plan just re-derives the scratch. */
   def postingsWithScratch(sigs: DataFrame, idCol: String, sigCol: String,
                           p: Params = Params()): (DataFrame, () => Unit) = {
-    val exploded = sigs.select(
-      col(idCol).cast("long").as("id"),
-      posexplode(bandSlices(col(sigCol), p)).as(Seq("band", "band_key")))
-    val keyed = withBucketKeys(exploded)
+    val keyed = keyedPostings(sigs, idCol, sigCol, p)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     (capBuckets(keyed, p.maxBucketSize), () => { keyed.unpersist(blocking = false); () })
   }
@@ -132,52 +132,83 @@ object Lsh {
         .select("id", "band", "key64", "key64b")
     }
 
-  /** Per-bucket posting counts `(band, key64, key64b, n)` for an index —
-    * the index-build-time stats table every capped probe consults to pick
-    * its band prefix WITHOUT materializing a single candidate row (the
-    * Spark analog of the reference's early exit: it stops reading buckets
-    * once max_candidates accumulate — minhash_lsh.py:95-96). Cached per
-    * index DataFrame instance (identity): both long-lived index holders
-    * (QueryEngine, SparkEntry's postings cache) reuse one stats build.
-    * Bounded LRU (8 indices) — evicted and stopped-session entries are
-    * unpersisted, so a long-lived service that periodically rebuilds its
-    * index does not accumulate cached stats tables. */
-  private val sizeCacheMax = 8
-  private val sizeCache =
-    new java.util.LinkedHashMap[DataFrame, DataFrame](16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[DataFrame, DataFrame]): Boolean =
-        if (size() > sizeCacheMax) {
-          if (!e.getKey.sparkSession.sparkContext.isStopped)
-            e.getValue.unpersist(blocking = false)
-          true
-        } else false
-    }
-  def bucketSizes(index: DataFrame): DataFrame = sizeCache.synchronized {
-    val it = sizeCache.entrySet().iterator()
-    while (it.hasNext) if (it.next().getKey.sparkSession.sparkContext.isStopped) it.remove()
-    val hit = sizeCache.get(index)
-    if (hit != null) hit
-    else {
-      val built = index.groupBy("band", "key64", "key64b").agg(count(lit(1)).as("n")).cache()
-      sizeCache.put(index, built)
-      built
-    }
+  /** Driver-side state for one index DataFrame, keyed by identity. All
+    * four parts live in ONE record, and the records in ONE bounded LRU
+    * ([[IndexStateSlots]] indexes) under one monitor:
+    *  - `stats`: the cached per-bucket count table
+    *    `(band, key64, key64b, n)` ([[bucketSizes]]) that capped probes
+    *    consult to pick their band prefix without materializing a single
+    *    candidate row (the Spark analog of the reference's early exit:
+    *    it stops reading buckets once max_candidates accumulate —
+    *    minhash_lsh.py:95-96);
+    *  - `statsMap`: the same counts collected to the driver
+    *    ([[warmDriverStats]]);
+    *  - `replica`: the [[DriverIndex]] serving replica
+    *    ([[warmDriverIndex]]);
+    *  - `probeCache`: the [[ProbeCache]] of recently probed buckets.
+    * Evicting an index — least recently used past the bound, its session
+    * stopped, or [[evictDriverState]] — drops the whole record and
+    * unpersists its stats table, so a long-lived service that
+    * periodically rebuilds its index accumulates neither cached stats
+    * tables nor driver replicas. Long-lived holders (QueryEngine,
+    * SparkEntry's postings cache) pass the same handle every call; a
+    * fresh DataFrame per call would build a record per call and evict a
+    * live index's. No Spark job runs under the monitor: collects happen
+    * outside it and their results are published after. */
+  private final class IndexState {
+    var stats: Option[DataFrame] = None
+    var statsMap: Option[Map[(Int, Long, Long), Long]] = None
+    var replica: Option[DriverIndex] = None
+    val probeCache = new ProbeCache
   }
 
-  /** DRIVER-resident bucket stats for small-enough indexes: the
-    * (band, key64, key64b) -> n map a capped single probe folds its band
-    * prefix from with ZERO Spark jobs — the exact analog of the
-    * reference's in-process dict lookups + early exit (minhash_lsh.py:
-    * 76-96, where the whole index is driver-local anyway). Collected ONCE
-    * per index at warm-up time ([[warmDriverStats]], called by
-    * `QueryEngine.warmUp`); probes never trigger the collect. Indexes
-    * whose stats exceed [[DriverStatsMaxEntries]] keep the distributed
-    * join path — a driver map stops being scale-safe there (at 100 TB the
-    * stats table itself is distributed). Sizing note: the boxed-tuple
-    * Scala Map costs ~200-300 bytes/entry, so a full 2^20-entry map is
-    * ~200-300 MB of driver heap, and the 8-slot LRU bounds the worst case
-    * at ~2 GB — a serving driver should be sized for that, or this
-    * constant lowered. */
+  private val IndexStateSlots = 8
+  private val indexStates =
+    new java.util.LinkedHashMap[DataFrame, IndexState](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[DataFrame, IndexState]): Boolean =
+        size() > IndexStateSlots && { release(e.getKey, e.getValue); true }
+    }
+
+  private def release(index: DataFrame, s: IndexState): Unit =
+    if (!index.sparkSession.sparkContext.isStopped) s.stats.foreach(_.unpersist(blocking = false))
+
+  /** Apply `f` to `index`'s record under the monitor — created first when
+    * absent and `create`, else None — after dropping the records whose
+    * session has stopped. */
+  private def withState[T](index: DataFrame, create: Boolean = false)(f: IndexState => T): Option[T] =
+    indexStates.synchronized {
+      val it = indexStates.entrySet().iterator()
+      while (it.hasNext) if (it.next().getKey.sparkSession.sparkContext.isStopped) it.remove()
+      var s = indexStates.get(index)
+      if (s == null && create) { s = new IndexState; indexStates.put(index, s) }
+      Option(s).map(f)
+    }
+
+  /** Per-bucket posting counts `(band, key64, key64b, n)` for an index,
+    * cached in its driver-state record: both long-lived index holders
+    * reuse one stats build. */
+  def bucketSizes(index: DataFrame): DataFrame =
+    withState(index, create = true) { s =>
+      s.stats.getOrElse {
+        val built = index.groupBy("band", "key64", "key64b").agg(count(lit(1)).as("n")).cache()
+        s.stats = Some(built)
+        built
+      }
+    }.get
+
+  /** Largest stats table collected into the driver map a capped single
+    * probe folds its band prefix from with ZERO Spark jobs — the exact
+    * analog of the reference's in-process dict lookups + early exit
+    * (minhash_lsh.py:76-96, where the whole index is driver-local
+    * anyway). Collected ONCE per index at warm-up time
+    * ([[warmDriverStats]], called by `QueryEngine.warmUp`); probes never
+    * trigger the collect. Indexes whose stats exceed this keep the
+    * distributed join path — a driver map stops being scale-safe there
+    * (at 100 TB the stats table itself is distributed). Sizing note: the
+    * boxed-tuple Scala Map costs ~200-300 bytes/entry, so a full
+    * 2^20-entry map is ~200-300 MB of driver heap, and the
+    * [[IndexStateSlots]]-record LRU bounds the worst case at ~2 GB — a
+    * serving driver should be sized for that, or this constant lowered. */
   final val DriverStatsMaxEntries: Long = 1L << 20
 
   /** Ceiling on DISTINCT doc ids the full driver replica
@@ -193,38 +224,24 @@ object Lsh {
     * for the jobless band-prefix fold (≈10 MB of signatures at 128
     * longs/query); bigger batches keep the fully distributed cap plan. */
   final val DriverBatchMaxQueries: Int = 10000
-  private val statsMapCache =
-    new java.util.LinkedHashMap[DataFrame, Map[(Int, Long, Long), Long]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[DataFrame, Map[(Int, Long, Long), Long]]): Boolean =
-        size() > sizeCacheMax
-    }
 
   /** Collect the index's bucket stats into the driver map if it is small
     * enough (one count + one collect over the CACHED stats table — warm-up
     * cost, not probe cost). Returns whether the driver map is available. */
-  def warmDriverStats(index: DataFrame): Boolean = {
-    val already = statsMapCache.synchronized {
-      val it = statsMapCache.entrySet().iterator()
-      while (it.hasNext) if (it.next().getKey.sparkSession.sparkContext.isStopped) it.remove()
-      statsMapCache.containsKey(index)
-    }
-    if (already) true
-    else {
+  def warmDriverStats(index: DataFrame): Boolean =
+    driverStats(index).isDefined || {
       val stats = bucketSizes(index)
-      if (stats.count() > DriverStatsMaxEntries) false
-      else {
+      stats.count() <= DriverStatsMaxEntries && {
         val m = stats.collect()
           .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)) -> r.getLong(3))
           .toMap
-        statsMapCache.synchronized(statsMapCache.put(index, m))
+        withState(index, create = true)(_.statsMap = Some(m))
         true
       }
     }
-  }
 
   private def driverStats(index: DataFrame): Option[Map[(Int, Long, Long), Long]] =
-    statsMapCache.synchronized(Option(statsMapCache.get(index)))
+    withState(index)(_.statsMap).flatten
 
   /** Driver-RESIDENT serving replica of a small index: bucket -> member
     * ids and id -> signature, the reference's per-worker in-memory tables
@@ -243,23 +260,11 @@ object Lsh {
       private[Lsh] val postings: java.util.HashMap[(Long, Long), Array[Long]],
       private[Lsh] val sigById: java.util.HashMap[Long, Array[Long]])
 
-  private val driverIndexCache =
-    new java.util.LinkedHashMap[DataFrame, DriverIndex](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[DataFrame, DriverIndex]): Boolean =
-        size() > sizeCacheMax
-    }
-
   /** Build the driver serving replica if the index is small enough (one
     * collect over the cached postings + one over the cached signatures —
     * warm-up cost). Returns whether the replica is available. */
   def warmDriverIndex(sigs: DataFrame, index: DataFrame): Boolean = {
-    val already = driverIndexCache.synchronized {
-      val it = driverIndexCache.entrySet().iterator()
-      while (it.hasNext) if (it.next().getKey.sparkSession.sparkContext.isStopped) it.remove()
-      driverIndexCache.containsKey(index)
-    }
-    if (already) true
+    if (driverIndexFor(index).isDefined) true
     else if (index.count() > DriverStatsMaxEntries) false
     else {
       val postRows = index.select("key64", "key64b", "id").collect()
@@ -285,39 +290,29 @@ object Lsh {
         sigs.join(broadcast(ids), sigs("doc_id") === col("rid"), "left_semi")
           .select("doc_id", "sig").collect()
           .foreach(r => sm.put(r.getLong(0), r.getSeq[Long](1).toArray))
-        driverIndexCache.synchronized(driverIndexCache.put(index, new DriverIndex(posts, sm)))
+        withState(index, create = true)(_.replica = Some(new DriverIndex(posts, sm)))
         true
       }
     }
   }
 
   def driverIndexFor(index: DataFrame): Option[DriverIndex] =
-    driverIndexCache.synchronized(Option(driverIndexCache.get(index)))
+    withState(index)(_.replica).flatten
 
   /** Test visibility: is a WARMED driver artifact (stats map or full
     * serving replica — the unbounded-per-index ones) still resident for
     * `index`? Pins the supersede-evict and close() contracts
-    * (InvarianceSpec). Probe-cache entries are deliberately excluded:
-    * any capped probe against an un-warmed index re-creates one, and
-    * they are residency-bounded by construction. */
+    * (InvarianceSpec). The probe cache is deliberately excluded: any
+    * capped probe against an un-warmed index re-creates one, and it is
+    * residency-bounded by construction. */
   private[graft] def hasDriverState(index: DataFrame): Boolean =
-    statsMapCache.synchronized(statsMapCache.containsKey(index)) ||
-      driverIndexCache.synchronized(driverIndexCache.containsKey(index))
+    withState(index)(s => s.statsMap.isDefined || s.replica.isDefined).contains(true)
 
-  /** Release every driver-side artifact held for `index` (stats map,
-    * serving replica, cached stats table) — called by
-    * `QueryEngine.close()` so a closed engine's tens-of-MB replica does
-    * not stay pinned on the driver until LRU eviction. */
-  def evictDriverState(index: DataFrame): Unit = {
-    statsMapCache.synchronized(statsMapCache.remove(index))
-    driverIndexCache.synchronized(driverIndexCache.remove(index))
-    probeCaches.synchronized(probeCaches.remove(index))
-    sizeCache.synchronized {
-      val cached = sizeCache.remove(index)
-      if (cached != null && !index.sparkSession.sparkContext.isStopped)
-        cached.unpersist(blocking = false)
-    }
-  }
+  /** Drop `index`'s driver-state record and unpersist its stats table —
+    * called by `QueryEngine.close()` so a closed engine's tens-of-MB
+    * replica does not stay pinned on the driver until LRU eviction. */
+  def evictDriverState(index: DataFrame): Unit =
+    indexStates.synchronized(Option(indexStates.remove(index))).foreach(release(index, _))
 
   /** Zero-job capped probe against a driver replica: the same band-prefix
     * cap fold, candidate dedup, m/128 estimated-Jaccard and
@@ -333,27 +328,28 @@ object Lsh {
     scoreTopK(candSet, di.sigById.get, querySig, k)
   }
 
-  /** The shared capped band-prefix fold: walk buckets in band order,
-    * accumulating members until `maxCandidates` accumulate (inclusive of
-    * the crossing bucket — the same takeWhile the distributed plan folds).
-    * `lookup` returns a bucket's member ids or null when the bucket is
-    * empty/absent. */
+  /** The driver's band-prefix cap rule, the deterministic form of the
+    * reference's early exit (minhash_lsh.py:95-96): the smallest prefix of
+    * the band-ordered `rowsByBand` whose cumulative `size` reaches `cap`,
+    * including the row that crosses it — every row when the total stays
+    * under `cap` or when `cap <= 0`. [[allowedBandPrefix]] is the same
+    * rule evaluated inside a Spark plan. */
+  private def bandPrefix[T](rowsByBand: Array[T], cap: Int)(size: T => Long): Array[T] =
+    if (cap <= 0) rowsByBand
+    else {
+      var before = 0L
+      rowsByBand.takeWhile { r => val ok = before < cap; before += size(r); ok }
+    }
+
+  /** The union of the member ids of the query's buckets in the cap's band
+    * prefix. `lookup` returns a bucket's member ids or null when the
+    * bucket is empty/absent (contributing nothing to the cap). */
   private def foldCandidates(qpRows: Array[(Int, Long, Long)], maxCandidates: Int,
                              lookup: (Long, Long) => Array[Long]): java.util.TreeSet[java.lang.Long] = {
-    val byBand = qpRows.sortBy(_._1)
-    var before = 0L
+    val buckets = qpRows.sortBy(_._1).map { case (_, key, keyB) => lookup(key, keyB) }
     val candSet = new java.util.TreeSet[java.lang.Long]()
-    var i = 0
-    while (i < byBand.length && (maxCandidates <= 0 || before < maxCandidates)) {
-      val (_, key, keyB) = byBand(i)
-      val ids = lookup(key, keyB)
-      if (ids != null) {
-        before += ids.length
-        var j = 0
-        while (j < ids.length) { candSet.add(ids(j)); j += 1 }
-      }
-      i += 1
-    }
+    bandPrefix(buckets, maxCandidates)(ids => if (ids == null) 0L else ids.length)
+      .foreach(ids => if (ids != null) ids.foreach(id => candSet.add(id)))
     candSet
   }
 
@@ -379,17 +375,18 @@ object Lsh {
       .map { case (id, s) => (id, s, sigOf(id).take(10).toSeq) }.toSeq
   }
 
-  /** LRU serving cache for capped single probes on indexes ABOVE the full
-    * driver-replica bounds: instead of the whole index, only the buckets
-    * recent probes touched (plus their members' signatures) are driver-
-    * resident. A probe whose 32 buckets and candidate signatures are all
-    * resident runs ZERO Spark jobs; a miss pays ONE bucket-fetch job (a
-    * key64-IN filter over the cached index — at 100 TB, a pruned scan of
-    * the bucketed table) and one signature fetch, then populates the
-    * cache. Hot-key serving workloads (the reference's repeated-probe
-    * shape) amortize to in-process latency; cold random probes cost what
-    * the distributed plan costs, ONE extra insert aside. Residency is
-    * bounded by [[ProbeCacheMaxPostings]] resident posting slots and
+  /** The record's serving cache for capped single probes on indexes
+    * ABOVE the full driver-replica bounds: instead of the whole index,
+    * only the buckets recent probes touched (plus their members'
+    * signatures) are driver-resident, each tier its own LRU. A probe
+    * whose 32 buckets and candidate signatures are all resident runs ZERO
+    * Spark jobs; a miss pays ONE bucket-fetch job (a key64-IN filter over
+    * the cached index — at 100 TB, a pruned scan of the bucketed table)
+    * and one signature fetch, then populates the cache. Hot-key serving
+    * workloads (the reference's repeated-probe shape) amortize to
+    * in-process latency; cold random probes cost what the distributed
+    * plan costs, ONE extra insert aside. Residency is bounded by
+    * [[ProbeCacheMaxPostings]] resident posting slots and
     * [[ProbeCacheMaxSigs]] signatures (~24 MB + ~135 MB), independent of
     * index size — driver memory stays flat at any scale. Results are
     * bit-identical to the distributed capped probe (same fold, same
@@ -415,21 +412,6 @@ object Lsh {
       new java.util.LinkedHashMap[Long, Array[Long]](256, 0.75f, true)
   }
 
-  private val probeCaches =
-    new java.util.LinkedHashMap[DataFrame, ProbeCache](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[DataFrame, ProbeCache]): Boolean =
-        size() > sizeCacheMax
-    }
-
-  private def probeCacheFor(index: DataFrame): ProbeCache = probeCaches.synchronized {
-    val it = probeCaches.entrySet().iterator()
-    while (it.hasNext) if (it.next().getKey.sparkSession.sparkContext.isStopped) it.remove()
-    var pc = probeCaches.get(index)
-    if (pc == null) { pc = new ProbeCache; probeCaches.put(index, pc) }
-    pc
-  }
-
   /** Capped single probe through the per-index [[ProbeCache]] — the
     * serving path for indexes too big for the full driver replica.
     * Returns (id, score, 10-slot preview), best first; bit-identical to
@@ -441,22 +423,7 @@ object Lsh {
                        k: Int, maxCandidates: Int,
                        fetchFrom: Option[DataFrame] = None): Seq[(Long, Double, Seq[Long])] = {
     require(maxCandidates > 0, "queryProbeCached requires a candidate cap")
-    val pc = probeCacheFor(index)
-    // Bound the FETCH to the cap's band prefix when the driver stats map
-    // is warm (round 11): the fold below only ever consumes the smallest
-    // band prefix whose cumulative bucket sizes reach the cap — typically
-    // one or two bands on a skewed corpus — yet the miss fetch used to
-    // pull all 32 buckets. At 4M docs that untrimmed fetch (up to
-    // 32 x maxBucketSize postings per probe) both paid a wider fetch job
-    // and THRASHED the bounded cache: 20 rotating probes exceeded
-    // ProbeCacheMaxPostings, every repeat became a miss, and "hot" serving
-    // read 87-298 ms vs 4-6 ms at <=1M. The trim computes the same prefix
-    // the fold will take (identical cumulative rule over identical sizes —
-    // the stats are grouped from this exact capped index), so results are
-    // bit-identical while the per-probe footprint shrinks ~16x. When the
-    // driver map is refused (bucket count above DriverStatsMaxEntries),
-    // the sizes come from one tiny lookup against the cached stats table
-    // instead — the trim holds at ANY index size.
+    val pc = withState(index, create = true)(_.probeCache).get
     // PHASE 1 (monitor): snapshot the resident buckets for THIS probe
     // over the UNTRIMMED band-sorted rows (array refs only — the snapshot
     // makes the fold immune to a racing probe's eviction) and note what
@@ -489,17 +456,10 @@ object Lsh {
     // naive "is every band row resident" test made every hot repeat look
     // like a miss and pay the sizes-lookup job — 98 ms hot probes at 16M
     // lean serving instead of in-process).
-    val missingAll = {
-      val b = Array.newBuilder[(Int, Long, Long)]
-      var before = 0L
-      var i = 0
-      while (i < sorted.length && before < maxCandidates) {
-        val ids = resident.get(sorted(i))
-        if (ids == null) b += sorted(i) else before += ids.length
-        i += 1
-      }
-      b.result()
-    }
+    val missingAll = bandPrefix(sorted, maxCandidates) { t =>
+      val ids = resident.get(t)
+      if (ids == null) 0L else ids.length
+    }.filterNot(resident.containsKey)
     // Trim the rows the FETCH will consider to the cap's band prefix
     // (round 11): the fold only ever consumes the smallest band prefix
     // whose cumulative bucket sizes reach the cap — typically one or two
@@ -539,12 +499,7 @@ object Lsh {
               .toMap
             m.getOrElse(_, 0L)
         }
-        var before = 0L
-        sorted.takeWhile { t =>
-          val ok = before < maxCandidates
-          before += sizesOf(t)
-          ok
-        }
+        bandPrefix(sorted, maxCandidates)(sizesOf)
       }
     val missing = {
       val keep = probeRows.toSet
@@ -775,10 +730,7 @@ object Lsh {
             .select("band", "n").collect()
             .map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
       }
-      var before = 0L
-      val allowedBands = sized.takeWhile { case (_, n) =>
-        val ok = before < maxCandidates; before += n; ok
-      }.map(_._1).toSet
+      val allowedBands = bandPrefix(sized, maxCandidates)(_._2).map(_._1).toSet
       val rows = (0 until p.bands).filter(allowedBands).map { b =>
         (b, querySig.slice(b * p.rows, (b + 1) * p.rows).toSeq)
       }
@@ -843,9 +795,9 @@ object Lsh {
     queryBatchImpl(sigs, index, queries, k, p, maxCandidates, None)
 
   /** `statsOverride`: bucket stats for a one-off index view (the bucketed
-    * pruned scan) — bypasses [[bucketSizes]]' identity-keyed cache, which
+    * pruned scan) — bypasses [[bucketSizes]]' identity-keyed record, which
     * a fresh DataFrame per call would churn (each miss builds and caches
-    * a stats table and evicts a live index's). */
+    * a stats table and evicts a live index's whole record). */
   private def queryBatchImpl(sigs: DataFrame, index: DataFrame, queries: DataFrame,
                              k: Int, p: Params, maxCandidates: Int,
                              statsOverride: Option[DataFrame]): DataFrame = {
@@ -863,11 +815,12 @@ object Lsh {
         // the batch once, compute each query's band keys by driver-
         // evaluating the same Catalyst XxHash64 expressions
         // ([[queryKeysLocal]] — bit-identical to the index build), fold
-        // its allowed band prefix against the stats map (the same
-        // takeWhile as the distributed fold: missing buckets contribute
-        // nothing either way), and inject the allowed postings as a
-        // broadcast LocalRelation — the distributed stats-join and
-        // per-query fold aggregation stages vanish from the plan.
+        // its allowed band prefix against the stats map ([[bandPrefix]]
+        // over the buckets it holds: missing buckets contribute nothing
+        // in the distributed fold either), and inject the allowed
+        // postings as a broadcast LocalRelation — the distributed
+        // stats-join and per-query fold aggregation stages vanish from
+        // the plan.
         // Otherwise: join the 32-rows-per-query postings against the
         // CACHED bucket-stats table (never the full index), fold each
         // query's sorted sizes into its allowed band prefix in-plan, and
@@ -880,20 +833,11 @@ object Lsh {
           if (collected.length > DriverBatchMaxQueries) None
           else Some {
             val rows = collected.flatMap { r =>
-              val keys = queryKeysLocal(r.getSeq[Long](1).toArray, p)
-              var before = 0L
-              val out = scala.collection.mutable.ArrayBuffer
-                .empty[org.apache.spark.sql.Row]
-              var i = 0
-              while (i < keys.length && before < maxCandidates) {
-                val (b, k64, k64b) = keys(i)
-                m.get((b, k64, k64b)).foreach { n =>
-                  out += org.apache.spark.sql.Row(r.get(0), b, k64, k64b)
-                  before += n
-                }
-                i += 1
+              val sized = queryKeysLocal(r.getSeq[Long](1).toArray, p)
+                .flatMap(t => m.get(t).map(t -> _))
+              bandPrefix(sized, maxCandidates)(_._2).map { case ((b, k64, k64b), _) =>
+                org.apache.spark.sql.Row(r.get(0), b, k64, k64b)
               }
-              out
             }
             import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
             val schema = StructType(Seq(

@@ -53,7 +53,7 @@ class NpySpec extends SparkSpec {
     spark.sparkContext.addSparkListener(listener)
     try {
       val df = Npy.readLongShards(spark, dir)
-      Thread.sleep(1000) // listener delivery is async; construction is done
+      org.apache.spark.ListenerDrain.drain(spark.sparkContext) // construction is done
       assert(jobs.get() == 0, s"header pass launched ${jobs.get()} job(s)")
       assert(df.count() == 7) // the single real pass still decodes everything
     } finally spark.sparkContext.removeSparkListener(listener)

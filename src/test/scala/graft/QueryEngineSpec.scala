@@ -112,10 +112,9 @@ class QueryEngineSpec extends SparkSpec {
     try {
       val hot = eng.query(qSig, 5)
       assert(hot == cold)
-      // the listener bus delivers asynchronously; any job the probe ran
-      // was submitted (and waited on) synchronously, so a bounded drain
-      // is enough for its start event to reach the listener
-      Thread.sleep(1000)
+      // any job the probe ran was submitted (and waited on)
+      // synchronously, so draining the bus delivers its start event
+      org.apache.spark.ListenerDrain.drain(spark.sparkContext)
       assert(jobs.get() == 0, s"hot probe fired ${jobs.get()} Spark job(s); expected 0")
     } finally spark.sparkContext.removeSparkListener(listener)
     eng.close()
@@ -199,7 +198,7 @@ class QueryEngineSpec extends SparkSpec {
       expect.foreach { case (qid, qSig, exp) =>
         assert(lean.query(qSig, 5) == exp, s"qid=$qid lean hot")
       }
-      Thread.sleep(1000)
+      org.apache.spark.ListenerDrain.drain(spark.sparkContext)
       assert(jobs.get() == 0, s"lean hot probes fired ${jobs.get()} Spark job(s); expected 0")
     } finally spark.sparkContext.removeSparkListener(listener)
     lean.close()
@@ -275,6 +274,63 @@ class QueryEngineSpec extends SparkSpec {
     val loaded = QueryEngine.load(spark, dir)
     assert(loaded.mpParams == graft.core.MinHashPipeline.Params())
     loaded.close(); eng.close()
+  }
+
+  test("openServing refuses a corrupt or missing params record, like load") {
+    val docs = spark.read.parquet(s"$testDataDir/documents.parquet")
+    val eng = QueryEngine.build(docs,
+      mp = graft.core.MinHashPipeline.Params(kShingle = 1))
+    val saved = Files.createTempDirectory("graft-idx-corrupt").toString
+    val serving = Files.createTempDirectory("graft-lean-corrupt").toString
+    eng.save(saved)
+    eng.saveServing(serving, "qeng_spec_corrupt", buckets = 4)
+    eng.close()
+    // a well-formed JSON record missing every build param: the read
+    // succeeds and the parse fails (checksum sidecars dropped so the read
+    // is not the part that fails)
+    for (dir <- Seq(saved, serving)) {
+      val paramsDir = new java.io.File(s"$dir/params")
+      paramsDir.listFiles().foreach { f =>
+        if (f.getName.endsWith(".crc")) f.delete()
+        else if (f.getName.endsWith(".json"))
+          Files.write(f.toPath, """{"unrelated":1}""".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      }
+    }
+    val fromLoad = intercept[IllegalStateException](QueryEngine.load(spark, saved))
+    val fromServing = intercept[IllegalStateException](
+      QueryEngine.openServing(spark, serving, "qeng_spec_corrupt"))
+    assert(fromLoad.getMessage.contains("params") && fromServing.getMessage.contains("params"))
+    // a serving layout without its record cannot default: it needs the
+    // bucket count to re-register its tables
+    import scala.reflect.io.Directory
+    new Directory(new java.io.File(s"$serving/params")).deleteRecursively()
+    intercept[IllegalStateException](QueryEngine.openServing(spark, serving, "qeng_spec_corrupt"))
+    spark.sql("DROP TABLE IF EXISTS qeng_spec_corrupt_postings")
+    spark.sql("DROP TABLE IF EXISTS qeng_spec_corrupt_sigs")
+  }
+
+  test("driver-state LRU eviction drops an index's whole record and it still answers") {
+    import graft.core.Lsh
+    // nine small engines warmed oldest first: the record LRU holds eight
+    // indexes, so the first engine's replica, stats map and cached stats
+    // table all go together
+    val mp = graft.core.MinHashPipeline.Params(kShingle = 1)
+    val engines = (0 until 9).map(i =>
+      QueryEngine.build(SyntheticCorpus.docs(spark, 20, seed = 500 + i), mp = mp))
+    val first = engines.head.warmUp()
+    val qSig = first.sigs.filter(col("doc_id") === 3).head().getSeq[Long](1).toArray
+    val answered = first.query(qSig, 5)
+    // the same plan as the record's stats table: its storage level is the
+    // cache manager's entry for that table
+    val stats = first.index.groupBy("band", "key64", "key64b").agg(count(lit(1)).as("n"))
+    val none = org.apache.spark.storage.StorageLevel.NONE
+    assert(Lsh.hasDriverState(first.index) && stats.storageLevel != none)
+    engines.tail.foreach(_.warmUp())
+    assert(!Lsh.hasDriverState(first.index), "first engine's record survived eight newer ones")
+    assert(stats.storageLevel == none, "evicted record's stats table is still cached")
+    // the evicted engine falls back to the probe-cache path, bit-identically
+    assert(first.query(qSig, 5) == answered)
+    engines.foreach(_.close())
   }
 
   test("save/load round-trip preserves query results") {

@@ -129,7 +129,7 @@ class StandingCorpusSpec extends SparkSpec {
         (9002L, (0 until 30).map(w => s"z$w").mkString(" "))
       ).toDF("doc_id", "text")
       val st = statuses(sc.classify(batch)).toMap
-      Thread.sleep(300)
+      org.apache.spark.ListenerDrain.drain(spark.sparkContext)
       assert(st(9001L) === "exact" && st(9002L) === "new")
     } finally spark.sparkContext.removeSparkListener(listener)
     info(s"trickle bytesRead=${bytesRead.get} standingBytes=$standingBytes")
@@ -228,7 +228,7 @@ class StandingCorpusSpec extends SparkSpec {
       racing = false
       sampler.get()
       assert(concurrent === serial, "concurrent verdicts must equal the serial ones")
-      Thread.sleep(300) // let the listener bus drain
+      org.apache.spark.ListenerDrain.drain(spark.sparkContext)
     } finally {
       racing = false
       spark.sparkContext.removeSparkListener(listener)

@@ -163,7 +163,7 @@ class VectorEngineSpec extends SparkSpec {
       spark.sparkContext.addSparkListener(listener)
       try {
         val hot = e2.query(v, k = 5, mode = "ivfpq", nprobe = np)
-        Thread.sleep(300)
+        org.apache.spark.ListenerDrain.drain(spark.sparkContext)
         assert(hot == want, s"vid=$vid nprobe=$np hot")
         assert(jobs.get() == 0, s"vid=$vid nprobe=$np: hot probe ran ${jobs.get()} job(s)")
       } finally spark.sparkContext.removeSparkListener(listener)
@@ -292,7 +292,7 @@ class VectorEngineSpec extends SparkSpec {
       spark.sparkContext.addSparkListener(listener)
       try {
         assert(lean.query(v, k = 5, mode = "ivfpq", nprobe = 3) == w, s"vid=$vid hot")
-        Thread.sleep(300)
+        org.apache.spark.ListenerDrain.drain(spark.sparkContext)
         assert(jobs.get() == 0, s"vid=$vid: lean hot probe ran ${jobs.get()} job(s)")
       } finally spark.sparkContext.removeSparkListener(listener)
     }
